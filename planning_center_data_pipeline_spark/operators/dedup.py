@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.operators.textstats import (
     normalize_text,
     tokens,
@@ -93,7 +94,9 @@ def shingle_table(
     extra cores return (measured 8-16 optimal on local[32] at sf0.1).
     At real scale the scan already exceeds the floor — no-op, no added
     shuffle."""
-    df = _tokenize_floor(df, id_col)
+    df = cpu_floor(
+        df, id_col, floor=min(df.sparkSession.sparkContext.defaultParallelism, 16)
+    )
     tokenized = df.select(
         F.col(id_col),
         *[F.col(c) for c in (extra_cols or [])],
@@ -158,6 +161,11 @@ def jaccard_pairs(
 
 
 # --- MinHash + LSH ----------------------------------------------------------
+# One banded-LSH pipeline (shingle -> signature -> band keys -> bucket
+# self-join -> exact verify) over a pluggable hash family: a family is
+# a `band_keys(shingle_df, id_col, n_hashes, bands)` function returning
+# (id, band_id, band_key) rows.  `xxh64_band_keys` is the production
+# fast path; `md5_band_keys` makes every stage reproducible in SQL.
 
 def minhash_signatures(
     shingle_df: DataFrame, id_col: str, n_hashes: int = 32
@@ -177,17 +185,15 @@ def minhash_signatures(
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str, bands: int = 8
+def xxh64_band_keys(
+    shingle_df: DataFrame, id_col: str, n_hashes: int, bands: int
 ) -> DataFrame:
-    """Band the signatures and emit candidate pairs that collide in at
-    least one band. Never materializes cross-product: pairs come from
-    a self-join on (band_id, band_hash) buckets.
-    Returns distinct (id_1, id_2), id_1 < id_2."""
-    n_hashes = None  # derived from array length at runtime
+    """xxhash64 family: array signatures from `minhash_signatures`, band
+    key = xxhash64 of the band's comma-joined decimal minhashes."""
+    signatures = minhash_signatures(shingle_df, id_col, n_hashes)
     sig_len = F.size(F.col("sig"))
     rows_per_band = (sig_len / bands).cast("int")
-    banded = signatures.select(
+    return signatures.select(
         F.col(id_col),
         F.explode(
             F.transform(
@@ -204,25 +210,11 @@ def lsh_candidate_pairs(
                                 lambda x: x.cast("string"),
                             ),
                         )
-                    ).alias("band_hash"),
+                    ).alias("band_key"),
                 ),
             )
         ).alias("bb"),
-    ).select(id_col, "bb.band_id", "bb.band_hash")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_1"), F.col(f"b.{id_col}").alias("id_2")
-        )
-        .distinct()
-    )
+    ).select(id_col, "bb.band_id", "bb.band_key")
 
 
 def _verify_pairs_arrays(
@@ -286,21 +278,54 @@ def minhash_near_dups(
     n_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
+    band_keys=xxh64_band_keys,
+    shingle_df: DataFrame | None = None,
+    pair_predicate=None,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH buckets →
-    candidate pairs → exact-Jaccard verification ≥ threshold."""
-    sh = shingle_table(df, id_col, text_col, k).cache()
-    sigs = minhash_signatures(sh, id_col, n_hashes)
-    cands = lsh_candidate_pairs(sigs, id_col, bands)
+    candidate pairs → exact-Jaccard verification ≥ threshold.  The pair
+    space is banded, never quadratic: only docs colliding on some
+    (band_id, band_key) bucket become candidates.
+
+    band_keys: the hash family (`xxh64_band_keys` or `md5_band_keys`).
+    shingle_df: pass a pre-built (id, shingle) table to share one
+    shingle scan with a caller that needs it too (the recall harness).
+    pair_predicate: optional Column filter on (id_1, id_2) applied to
+    the CANDIDATES before the exact-verify joins — semantics-preserving
+    for any downstream restriction to the same predicate, and it cuts
+    the rescore cost proportionally (the recall harness only scores
+    panel-touching pairs)."""
+    sh = (
+        shingle_df
+        if shingle_df is not None
+        else shingle_table(df, id_col, text_col, k)
+    ).cache()
+    banded = band_keys(sh, id_col, n_hashes, bands)
+    a = banded.alias("a")
+    b = banded.alias("b")
+    cands = (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_1"), F.col(f"b.{id_col}").alias("id_2")
+        )
+        .distinct()
+    )
+    if pair_predicate is not None:
+        cands = cands.where(pair_predicate)
     return _verify_pairs_arrays(sh, id_col, cands, threshold)
 
 
-# --- engine-portable (md5-based) sketch variants -----------------------------
+# --- engine-portable (md5-based) hash family ---------------------------------
 # xxhash64 is Spark-only; md5 exists in every engine (DuckDB mirror:
 # CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)), so sketches built on
 # it are cross-checkable value-for-value against a SQL oracle.  The md5
 # family is ~2x slower than xxhash64 (still JVM codegen) — production
-# paths keep xxhash64; these variants exist for verifiability and for
+# paths keep xxhash64; this family exists for verifiability and for
 # interop with engines that persist md5-based signatures.
 
 def md5_hash60(col: Column, seed: int | None = None) -> Column:
@@ -310,121 +335,66 @@ def md5_hash60(col: Column, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
 
 
-def _md5_hash60_family(col_sql: str, n_hashes: int) -> list[Column]:
-    """n_hashes 60-bit hash expressions over the column named
-    `col_sql`, from ceil(n/2) md5 evaluations: one 128-bit md5 yields
-    two independent 60-bit halves (hex chars 1-15 and 17-31) — halves
-    the dominant md5 cost of wide MinHash signatures. Mirror:
-    substr(md5(seed||'|'||x), 1|17, 15) base-16.  Each hash is one
-    F.expr SQL string (driver-side py4j cost, see srp_signature)."""
-    out: list[Column] = []
-    for seed in range((n_hashes + 1) // 2):
-        h = f"md5(concat('{seed}|', {col_sql}))"
-        out.append(F.expr(f"cast(conv(substr({h}, 1, 15), 16, 10) as bigint)"))
-        out.append(F.expr(f"cast(conv(substr({h}, 17, 15), 16, 10) as bigint)"))
-    return out[:n_hashes]
-
-
-def minhash_signatures_portable(
-    shingle_df: DataFrame, id_col: str, n_hashes: int = 16
-) -> DataFrame:
-    """Long-format MinHash signature (id, j, minhash) on the md5
-    family — every value reproducible by the SQL oracle."""
-    sig = F.array(*[F.col(f"h{j}") for j in range(n_hashes)])
-    return (
-        _hex_digest_rows(shingle_df, id_col, n_hashes)
-        .groupBy(id_col)
-        .agg(*_hex_min_aggs(n_hashes))
-        .select(F.col(id_col), *_hex_conv_cols(n_hashes))
-        .select(F.col(id_col), F.posexplode(sig).alias("j", "minhash"))
-        .withColumn("j", F.col("j").cast("long"))
-    )
-
-
-def _hex_digest_rows(
+def md5_minhash_columns(
     shingle_df: DataFrame, id_col: str, n_hashes: int
 ) -> DataFrame:
-    """(id, m0..m{d-1}) rows with the md5 digests computed directly per
-    occurrence row — a pure map stage, zero shuffles.
+    """(id, h0..h{n-1}) MinHash signature columns on the md5 family:
+    hash j is 60 bits of md5(f"{j // 2}|" || shingle) — hex chars 1-15
+    for even j, 17-31 for odd j, so one md5 yields two hashes.
 
-    r12 (guide §2.3 "shuffle fewer bytes"): this REPLACES a
-    compute-per-DISTINCT-shingle + join-back form.  That vocabulary
-    join saved ~9/10 of the md5 evaluations (27k distinct vs 260k
-    occurrences at sf0.1) but paid a distinct shuffle of the occurrence
-    strings plus a broadcast probe per row — A/B'd in one session, min
-    of 4 noop reps: digest-join chain 2.36 s vs direct 0.62 s for the
-    full signature build.  Codegen'd md5 over short strings is cheaper
-    than moving the row; the trade only reverses when the per-value
-    hash work dwarfs a shuffle write (cf. the |E|:|V| ~ 100:1 8-hash
-    family in plans/wave39, where the vocabulary join measured as a
-    win).  Values are identical either way (same md5(seed|shingle)
-    family)."""
+    r12 (guide §2.3 "shuffle fewer bytes"): the digests are computed
+    directly per occurrence row — a pure map stage, zero shuffles.  This
+    REPLACES a compute-per-DISTINCT-shingle + join-back form.  That
+    vocabulary join saved ~9/10 of the md5 evaluations (27k distinct vs
+    260k occurrences at sf0.1) but paid a distinct shuffle of the
+    occurrence strings plus a broadcast probe per row — A/B'd in one
+    session, min of 4 noop reps: digest-join chain 2.36 s vs direct
+    0.62 s for the full signature build.  Codegen'd md5 over short
+    strings is cheaper than moving the row; the trade only reverses when
+    the per-value hash work dwarfs a shuffle write (cf. the |E|:|V| ~
+    100:1 8-hash family in plans/wave39, where the vocabulary join
+    measured as a win).
+
+    The per-group min runs over the fixed-width lowercase HEX substring
+    (lexicographic order on fixed-length hex equals numeric order), and
+    only the per-group winners are base-16 decoded: |groups| * n_hashes
+    convs instead of |shingle rows| * n_hashes."""
     n_digests = (n_hashes + 1) // 2
-    return shingle_df.select(
+    digests = shingle_df.select(
         F.col(id_col),
         *[
             F.expr(f"md5(concat('{seed}|', shingle)) AS m{seed}")
             for seed in range(n_digests)
         ],
     )
-
-
-def _hex_min_aggs(n_hashes: int) -> list[Column]:
-    """min over the fixed-width lowercase HEX substring — lexicographic
-    order on fixed-length hex equals numeric order."""
-    return [
-        F.expr(f"min(substr(m{j // 2}, {1 if j % 2 == 0 else 17}, 15)) AS s{j}")
-        for j in range(n_hashes)
-    ]
-
-
-def _hex_conv_cols(n_hashes: int) -> list[Column]:
-    """base-16-decode only the per-group winners: |groups| * n_hashes
-    convs instead of |shingle rows| * n_hashes."""
-    return [
-        F.expr(f"cast(conv(s{j}, 16, 10) as bigint) AS h{j}")
-        for j in range(n_hashes)
-    ]
-
-
-def minhash_near_dups_portable(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    n_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-    shingle_df: DataFrame | None = None,
-    pair_predicate=None,
-) -> DataFrame:
-    """MinHash→LSH→verify pipeline on the md5 family with md5 band
-    keys, so the whole pipeline (not just the verified output) has an
-    exact SQL twin. Same bucket-join structure as minhash_near_dups:
-    the pair space is banded, never quadratic.
-
-    shingle_df: pass a pre-built (id, shingle) table to share one
-    shingle scan with a caller that needs it too (the recall harness).
-    pair_predicate: optional Column filter on (id_1, id_2) applied to
-    the CANDIDATES before the exact-verify joins — semantics-preserving
-    for any downstream restriction to the same predicate, and it cuts
-    the rescore cost proportionally (the recall harness only scores
-    panel-touching pairs)."""
-    rows_per_band = n_hashes // bands
-    sh = (
-        shingle_df
-        if shingle_df is not None
-        else shingle_table(df, id_col, text_col, k)
-    ).cache()
-    # same per-row-digest + hex-min + decode-winners-only shape as
-    # minhash_signatures_portable (bit-identical)
-    sigs = (
-        _hex_digest_rows(sh, id_col, n_hashes)
-        .groupBy(id_col)
-        .agg(*_hex_min_aggs(n_hashes))
-        .select(F.col(id_col), *_hex_conv_cols(n_hashes))
+    return (
+        digests.groupBy(id_col)
+        .agg(
+            *[
+                F.expr(
+                    f"min(substr(m{j // 2}, {1 if j % 2 == 0 else 17}, 15)) AS s{j}"
+                )
+                for j in range(n_hashes)
+            ]
+        )
+        .select(
+            F.col(id_col),
+            *[
+                F.expr(f"cast(conv(s{j}, 16, 10) as bigint) AS h{j}")
+                for j in range(n_hashes)
+            ],
+        )
     )
-    banded = sigs.select(
+
+
+def md5_band_keys(
+    shingle_df: DataFrame, id_col: str, n_hashes: int, bands: int
+) -> DataFrame:
+    """md5 family: signature columns from `md5_minhash_columns`, band
+    key = md5 of the band's comma-joined decimal minhashes."""
+    rows_per_band = n_hashes // bands
+    sigs = md5_minhash_columns(shingle_df, id_col, n_hashes)
+    return sigs.select(
         F.col(id_col),
         F.explode(
             F.array(
@@ -448,138 +418,6 @@ def minhash_near_dups_portable(
             )
         ).alias("bb"),
     ).select(id_col, "bb.band_id", "bb.band_key")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_1"), F.col(f"b.{id_col}").alias("id_2")
-        )
-        .distinct()
-    )
-    if pair_predicate is not None:
-        cands = cands.where(pair_predicate)
-    return _verify_pairs_arrays(sh, id_col, cands, threshold)
-
-
-def _tokenize_floor(df: DataFrame, id_col: str) -> DataFrame:
-    """shingle_table's scan-parallelism floor (see its docstring), for
-    the SimHash tokenize stages: spread a below-floor scan over the id
-    hash so the regex tokenize + explode does not serialize on the one
-    partition parquet gives a small single-file corpus.  Capped at 16
-    for the same downstream-join-fragmentation reason."""
-    floor = min(df.sparkSession.sparkContext.defaultParallelism, 16)
-    if df.rdd.getNumPartitions() < floor:
-        df = df.repartition(floor, F.col(id_col))
-    return df
-
-
-def simhash_signatures_portable(
-    df: DataFrame, id_col: str, text_col: str, n_bits: int = 60
-) -> DataFrame:
-    """SimHash on the md5 family (60-bit: 15 hex chars keep the int64
-    positive in both engines). Same explode→bit-sum→assemble plan as
-    simhash_signatures."""
-    # r12 (guide §2.5): the regex tokenize + explode is CPU-dense per
-    # input byte and a small corpus scans as ONE partition — same floor
-    # rationale (and cap) as shingle_table; per-row, results unchanged.
-    df = _tokenize_floor(df, id_col)
-    tok = df.select(
-        F.col(id_col),
-        F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok"),
-    )
-    # same (doc, token)-count pre-aggregation as simhash_signatures:
-    # weighted +-cnt bit sums.  r13 A/B (guide §2.3, the round-12
-    # minhash _hex_digest_rows precedent): r12 computed the md5+conv
-    # once per DISTINCT token and joined it back, betting the Zipf
-    # vocabulary's smaller cardinality beats per-row hashing — but the
-    # vocabulary distinct + join (and the checkpoint it needed) cost
-    # more than the codegen'd md5 it saved at this |rows|:|distinct|
-    # ratio: signature stage 0.72 -> 0.42 s warm min at sf0.1, values
-    # bit-identical (exceptAll both ways = 0).  The hash now evaluates
-    # once per (doc, token) GROUP — the groupBy already shrank the row
-    # count — with zero extra shuffles.
-    per_doc = tok.groupBy(id_col, "tok").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    cnt = per_doc.withColumn("h", md5_hash60(F.col("tok")))
-    # SQL-string expressions for the same driver-side py4j reason as
-    # simhash_signatures
-    bit_sums = [
-        F.expr(f"sum(if((h >> {i}) & 1 = 1, cnt, -cnt)) AS b{i}")
-        for i in range(n_bits)
-    ]
-    agg = cnt.groupBy(id_col).agg(*bit_sums)
-    assemble = " + ".join(
-        f"shiftleft(cast(b{i} > 0 as bigint), {i})" for i in range(n_bits)
-    )
-    return agg.select(F.col(id_col), F.expr(f"{assemble} AS simhash"))
-
-
-def simhash_near_dups_portable(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_bits: int = 60,
-    n_chunks: int = 4,
-    max_hamming: int = 5,
-) -> DataFrame:
-    """Near-dup pairs on the md5 SimHash, blocked on (n_bits/n_chunks)-
-    bit signature chunks so the pair space is bucketed, never quadratic
-    — same structure as `simhash_near_dups`, but every stage (hash
-    family, chunk keys, Hamming verify) has an exact SQL twin.
-
-    Recall note: chunk blocking guarantees all pairs within Hamming
-    distance n_chunks-1; beyond that it is approximate — but
-    *deterministically* approximate (the oracle mirrors the same
-    blocking), so results stay engine-portable bit-for-bit.
-    Returns (id_1, id_2, hamming), id_1 < id_2."""
-    chunk_bits = n_bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-    sigs = simhash_signatures_portable(df, id_col, text_col, n_bits)
-    chunks = sigs.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftright(F.col("simhash"), c * chunk_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("cc"),
-    ).select(id_col, "simhash", "cc.chunk_id", "cc.chunk")
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_1"),
-            F.col(f"b.{id_col}").alias("id_2"),
-            hamming.alias("hamming"),
-        )
-        # filter BEFORE distinct: hamming is part of the distinct key, so
-        # the predicate commutes, and the dedup aggregate only sees the
-        # (much smaller) surviving pair set
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
 
 
 # --- connected components ----------------------------------------------------
@@ -688,48 +526,79 @@ def connected_components(
 
 
 # --- SimHash ----------------------------------------------------------------
+# One plan for both hash families: F.xxhash64 over 64 bits (the
+# production default) or md5_hash60 over 60 bits (15 hex chars keep the
+# int64 positive in both engines, so every stage has an exact SQL twin).
 
-def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash per document from token hashes: bit i of the
+def simhash_signatures(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    hash_fn=F.xxhash64,
+    n_bits: int = 64,
+) -> DataFrame:
+    """n_bits-wide SimHash per document from token hashes: bit i of the
     signature is the sign of sum over tokens of (+1 if bit i of
-    xxhash64(token) else -1).  Pure expressions: explode → 64
+    hash_fn(token) else -1).  Pure expressions: explode → n_bits
     conditional sums → bit assembly."""
-    # r12 (guide §2.5): same tokenize-parallelism floor as the portable
-    # variant / shingle_table; per-row, results unchanged.
-    df = _tokenize_floor(df, id_col)
+    # r12 (guide §2.5): the regex tokenize + explode is CPU-dense per
+    # input byte and a small corpus scans as ONE partition — same floor
+    # rationale (and cap) as shingle_table; per-row, results unchanged.
+    df = cpu_floor(
+        df, id_col, floor=min(df.sparkSession.sparkContext.defaultParallelism, 16)
+    )
     tok = df.select(
         F.col(id_col),
         F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok"),
     )
-    # pre-aggregate to (doc, token) counts before the 64 bit-sums: on a
+    # pre-aggregate to (doc, token) counts before the bit-sums: on a
     # Zipf-distributed corpus this shrinks the bit-sum input by the mean
-    # token multiplicity (and hashes each distinct token once, not once
-    # per occurrence); weighted +-cnt sums are exactly the per-occurrence
-    # +-1 sums in integer arithmetic
+    # token multiplicity (and hashes each distinct token once per doc,
+    # not once per occurrence); weighted +-cnt sums are exactly the
+    # per-occurrence +-1 sums in integer arithmetic.  r13 A/B (guide
+    # §2.3): hashing per (doc, token) GROUP beat r12's hash-per-distinct-
+    # token vocabulary join for md5 (signature stage 0.72 -> 0.42 s warm
+    # min at sf0.1, values bit-identical) — zero extra shuffles.
     cnt = tok.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("cnt")).withColumn(
-        "h", F.xxhash64("tok")
+        "h", hash_fn(F.col("tok"))
     )
-    # the 64 bit-sums and the 64-term assembly are built as SQL strings
-    # (one py4j call each via F.expr), not nested Column objects: the
-    # Column-object form spent ~4s of DRIVER time per query on py4j
-    # round-trips before Spark even saw the plan
+    # the bit-sums and the assembly are built as SQL strings (one py4j
+    # call each via F.expr), not nested Column objects: the Column-object
+    # form spent ~4s of DRIVER time per query on py4j round-trips before
+    # Spark even saw the plan
     bit_sums = [
-        F.expr(f"sum(if((h >> {i}) & 1 = 1, cnt, -cnt)) AS b{i}") for i in range(64)
+        F.expr(f"sum(if((h >> {i}) & 1 = 1, cnt, -cnt)) AS b{i}")
+        for i in range(n_bits)
     ]
     agg = cnt.groupBy(id_col).agg(*bit_sums)
     assemble = " + ".join(
-        f"shiftleft(cast(b{i} > 0 as bigint), {i})" for i in range(64)
+        f"shiftleft(cast(b{i} > 0 as bigint), {i})" for i in range(n_bits)
     )
     return agg.select(F.col(id_col), F.expr(f"{assemble} AS simhash"))
 
 
 def simhash_near_dups(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    hash_fn=F.xxhash64,
+    n_bits: int = 64,
+    n_chunks: int = 4,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, blocked on 16-bit
-    chunks (pigeonhole: distance <= 3 over 4 chunks => >= 1 identical
-    chunk), so the join space is bucketed, not quadratic."""
-    sigs = simhash_signatures(df, id_col, text_col)
+    """Near-dup pairs by SimHash Hamming distance, blocked on
+    (n_bits/n_chunks)-bit signature chunks so the join space is
+    bucketed, not quadratic.
+
+    Recall note: chunk blocking guarantees all pairs within Hamming
+    distance n_chunks-1 (pigeonhole: distance <= 3 over 4 chunks => >= 1
+    identical chunk); beyond that it is approximate — but
+    *deterministically* approximate (the md5 oracle mirrors the same
+    blocking), so results stay engine-portable bit-for-bit.
+    Returns (id_1, id_2, hamming), id_1 < id_2."""
+    chunk_bits = n_bits // n_chunks
+    mask = (1 << chunk_bits) - 1
+    sigs = simhash_signatures(df, id_col, text_col, hash_fn, n_bits)
     chunks = sigs.select(
         F.col(id_col),
         "simhash",
@@ -738,19 +607,18 @@ def simhash_near_dups(
                 *[
                     F.struct(
                         F.lit(c).alias("chunk_id"),
-                        F.shiftright(F.col("simhash"), c * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
+                        F.shiftright(F.col("simhash"), c * chunk_bits)
+                        .bitwiseAND(F.lit(mask))
                         .alias("chunk"),
                     )
-                    for c in range(4)
+                    for c in range(n_chunks)
                 ]
             )
         ).alias("cc"),
     ).select(id_col, "simhash", "cc.chunk_id", "cc.chunk")
     a = chunks.alias("a")
     b = chunks.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    hamming = F.bit_count(xor)
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
         a.join(
             b,

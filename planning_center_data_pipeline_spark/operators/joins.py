@@ -14,6 +14,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+def broadcast_scaled(df: DataFrame) -> DataFrame:
+    """Broadcast hint for a join side that grows with the data (|V|
+    node tables, |docs| payload arrays), unless broadcasting is off.
+
+    Such sides are usually small enough to broadcast, but the planner
+    often cannot see it: localCheckpoint erases size estimates, and
+    Generate passes a tiny pre-explode estimate through, so without a
+    hint it broadcasts the wrong side or falls back to a sort-merge
+    join.  The hint follows Spark's own switch: with
+    `spark.sql.autoBroadcastJoinThreshold` set to -1 (any negative
+    value) no hint is added, and the join degrades to a shuffle join
+    instead of failing with an oversized broadcast."""
+    threshold = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    return df if threshold.strip().startswith("-") else F.broadcast(df)
+
+
 def attach_primary(
     base: DataFrame,
     detail: DataFrame,

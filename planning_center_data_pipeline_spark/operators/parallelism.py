@@ -13,10 +13,12 @@ shuffle, no constant tuned to the local core count (the floor follows
 SPARK_GRAFT_CPUS via defaultParallelism, so the driver's lower-core
 bench runs keep their own floor).
 
-Older call sites (dedup.shingle_table, wave8/wave11 local helpers) cap
-the floor at 16 because their downstream *joins* fragment past that;
-per-row map work has no such coupling, so this helper defaults to the
-full default parallelism.
+Call sites whose downstream *joins* fragment past 16 partitions (the
+dedup shingle/SimHash tokenize stages, the plan-module regex scans)
+pass `floor=min(defaultParallelism, 16)`; per-row map work has no such
+coupling, so this helper defaults to the full default parallelism.
+This is the only copy of the floor: every scan-parallelism floor in
+the package calls it.
 """
 
 from __future__ import annotations

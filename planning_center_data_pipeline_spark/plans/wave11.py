@@ -34,23 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from planning_center_data_pipeline_spark.functions.exact import cents
+from planning_center_data_pipeline_spark.operators.graph import copurchase_adjacency
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _BPE_SQL_PAT = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-def _parallel_floor(df: DataFrame, key: str) -> DataFrame:
-    """Repartition small single-file scans up to a bounded floor so
-    CPU-dense per-row regex work before the first shuffle does not
-    serialize on one core (same rationale as dedup.shingle_table)."""
-    floor = min(df.sparkSession.sparkContext.defaultParallelism, 16)
-    if df.rdd.getNumPartitions() < floor:
-        df = df.repartition(floor, F.col(key))
-    return df
 
 
 # --- integer-exact PageRank over the co-purchase graph -----------------------
@@ -76,11 +64,12 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge), so there is no dangling-mass term.
 
     Plan shape (r12 rewrite, guide §2.3/§2.4/§3.3): the edge relation
-    is built and iterated as an ADJACENCY LIST, two exchanges total —
-    collect_set(pk) per order (one shuffle, basket-bounded arrays),
-    map-side pair explosion, collect_set(dst) per src (one shuffle,
-    dedup inside the aggregate replaces the former pair-distinct
-    exchange).  deg = size(dsts) is identical to the former
+    is built and iterated as an ADJACENCY LIST
+    (operators.graph.copurchase_adjacency) — collect_set(pk) per order
+    (one shuffle, basket-bounded arrays), map-side pair explosion,
+    collect_set(dst) per src (one shuffle, dedup inside the aggregate
+    replaces the former pair-distinct exchange), then one |V|-row
+    re-spread before the checkpoint.  deg = size(dsts) is identical to the former
     count-per-src over distinct pairs.  Each of the 5 iterations then
     joins |V|-row frames only and explodes dsts AFTER the join (guide
     §3.3: join on the un-exploded key), so no fact-sized row set is
@@ -93,22 +82,10 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 5 remaining per-iteration exchanges carry |V| rows, not |E|).
     Output is top-20 via TakeOrderedAndProject.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .groupBy("ok")
-        .agg(F.collect_set("pk").alias("pks"))
-    )
-    pairs = (
-        baskets.select(F.explode("pks").alias("src"), F.col("pks"))
-        .select("src", F.explode("pks").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
-    adj = (
-        pairs.groupBy("src")
-        .agg(F.collect_set("dst").alias("dsts"))
-        .select("src", "dsts", F.size("dsts").cast("bigint").alias("deg"))
-        .localCheckpoint(eager=False)
+    adj = copurchase_adjacency(load_table(spark, sf_dir, "lineitem")).select(
+        F.col("u").alias("src"),
+        F.col("nbrs").alias("dsts"),
+        F.size("nbrs").cast("bigint").alias("deg"),
     )
     n1 = adj.agg(F.count(F.lit(1)).alias("n_nodes"))  # 1 row
     nodes = (
@@ -128,24 +105,24 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the 3.25 s total at sf0.1).  Round expressions are the
     # identical integer-exact trees (`r DIV deg`, `(15*base) DIV 100 +
     # (85*coalesce(s,0)) DIV 100`), so results are bit-identical.
-    adj.createOrReplaceTempView("pr_adj")
-    nodes.createOrReplaceTempView("pr_nodes")
-    rounds = ["r0 AS (SELECT node, base AS r FROM pr_nodes)"]
+    rounds = ["r0 AS (SELECT node, base AS r FROM {nodes})"]
     prev = "r0"
     for i in range(1, _PR_ITERS + 1):
         rounds.append(
             f"r{i} AS (SELECT n.node, "
             "(15 * n.base) DIV 100 + "
             "(85 * coalesce(c.s, CAST(0 AS BIGINT))) DIV 100 AS r "
-            "FROM pr_nodes n LEFT JOIN ("
+            "FROM {nodes} n LEFT JOIN ("
             "SELECT cnode, SUM(c) AS s FROM ("
             "SELECT explode(a.dsts) AS cnode, x.r DIV a.deg AS c "
-            f"FROM {prev} x JOIN pr_adj a ON x.node = a.src"
+            f"FROM {prev} x JOIN {{adj}} a ON x.node = a.src"
             ") GROUP BY cnode) c ON n.node = c.cnode)"
         )
         prev = f"r{i}"
     ranks = adj.sparkSession.sql(
-        "WITH " + ", ".join(rounds) + f" SELECT node, r FROM {prev}"
+        "WITH " + ", ".join(rounds) + f" SELECT node, r FROM {prev}",
+        adj=adj,
+        nodes=nodes,
     )
     return (
         ranks.orderBy(F.desc("r"), "node")
@@ -221,7 +198,7 @@ def cust_rfm_global_quintiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference date and the three cutoff arrays are two 1-row
     aggregates broadcast back; the segment rollup is <= 125 rows.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per = o.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.max(F.to_date("o_orderdate")).alias("last_d"),
         F.count(F.lit(1)).alias("f"),
@@ -330,8 +307,8 @@ def ml_threshold_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row cutoff aggregate exploded to 9 rows and broadcast; the
     9-way fan-out feeds one conditional aggregation; output is 9 rows.
     """
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     buyers = (
         o.filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_custkey").alias("ck"))
@@ -429,7 +406,11 @@ def doc_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle_table lesson); then one shuffle to the (lang, source)
     rollup.
     """
-    d = _parallel_floor(_t(spark, sf_dir, "documents"), "doc_id")
+    d = cpu_floor(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        floor=min(spark.sparkContext.defaultParallelism, 16),
+    )
     per = d.select(
         "lang",
         "source",
@@ -503,7 +484,11 @@ def doc_zipf_rankfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject; the rank window orders 50 rows, and the
     corpus-total divisor is a 1-row aggregate broadcast.
     """
-    d = _parallel_floor(_t(spark, sf_dir, "documents"), "doc_id")
+    d = cpu_floor(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        floor=min(spark.sparkContext.defaultParallelism, 16),
+    )
     toks = d.select(
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token")
     ).filter(F.col("token") != "")
@@ -568,7 +553,7 @@ def cust_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows parallelize, and the only global window runs over the
     <=32-row bucket totals.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.sum(cents("o_totalprice")).alias("v")
     )

@@ -22,13 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from planning_center_data_pipeline_spark.operators import similarity as S
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _DIMS = 64
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --- dedup threshold sweep ------------------------------------------------------
@@ -49,7 +46,7 @@ def emb_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fanned out to the 4-row threshold table (broadcast); both
     rollups are per-threshold conditional aggregates.
     """
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     pairs = S.near_dup_pairs_by_block_pandas(
         e, "label", threshold=min(_SWEEP_THRESHOLDS)
     )
@@ -145,10 +142,10 @@ def doc_rag_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson); no shuffle at all until the output sort — chunking is
     embarrassingly parallel.
     """
-    d = _t(spark, sf_dir, "documents")
-    floor = min(spark.sparkContext.defaultParallelism, 16)
-    if d.rdd.getNumPartitions() < floor:
-        d = d.repartition(floor, F.col("doc_id"))
+    d = load_table(spark, sf_dir, "documents")
+    d = cpu_floor(
+        d, "doc_id", floor=min(spark.sparkContext.defaultParallelism, 16)
+    )
     toks = d.select(
         "doc_id",
         F.split(

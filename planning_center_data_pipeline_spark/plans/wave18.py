@@ -22,15 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from planning_center_data_pipeline_spark.operators.graph import copurchase_adjacency
 from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.operators.similarity import Q_SCALE
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _DIMS = 64
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --- embedding centroid drift ---------------------------------------------------
@@ -48,7 +45,7 @@ def emb_label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: posexplode is map-side; one shuffle to (label, dim)
     sums, one to the |labels|-row rollup.
     """
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     comp = e.select(
         "label",
         (F.col("vec_id") % 2 == 0).alias("even"),
@@ -161,7 +158,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape (r12 rewrite; r13 onto the shared symmetric adjacency,
     VERDICT item 5, guide §2.4): the graph is built ONCE as
-    `_copurchase_sym_adj` (shared with assortativity/LCC — collect_set
+    `operators.graph.copurchase_adjacency` (shared with assortativity/LCC — collect_set
     per order -> map-side pair explosion -> collect_set per node).  In
     a symmetric graph the hub-capped per-neighbor source lists ARE the
     adjacency rows themselves: srcs(nbr) = nbrs(nbr) whenever
@@ -183,14 +180,10 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer; per-part co-purchase degree is bounded by baskets-per-part
     x basket size (~30 x 7 at any SF — parts scale with SF), so the
     arrays stay KB-sized; the probe/wedge explode is additionally
-    hub-capped at {cap}.
-    """.format(cap=_CN_HUB_CAP)
-    from planning_center_data_pipeline_spark.plans.wave43 import (
-        _copurchase_sym_adj,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    und = _copurchase_sym_adj(li)
+    hub-capped at 128 (_CN_HUB_CAP).
+    """
+    li = load_table(spark, sf_dir, "lineitem")
+    und = copurchase_adjacency(li)
     lowdeg = und.where(F.size("nbrs") <= _CN_HUB_CAP).select(
         F.col("u").alias("nbr"), F.col("nbrs").alias("srcs")
     )
@@ -305,7 +298,7 @@ def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     on ONE core.  cpu_floor spreads the expand+partial-sort across the
     box; a no-op at real scale where the scan splits on its own.
     """
-    o = cpu_floor(_t(spark, sf_dir, "orders"), "o_orderkey")
+    o = cpu_floor(load_table(spark, sf_dir, "orders"), "o_orderkey")
     cents_tp = F.round(F.col("o_totalprice") * 100).cast("bigint")
     day = F.date_format("o_orderdate", "yyyy-MM-dd")
     wide = o.agg(

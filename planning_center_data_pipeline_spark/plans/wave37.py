@@ -44,10 +44,6 @@ _BH_ALPHA_INV = 20  # alpha = 1/20
 _BM25_TERMS = ("data", "pipeline", "quality", "model", "training")
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- windowFunnel ------------------------------------------------------------
 
 def ev_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,7 +55,7 @@ def ev_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: three user_id-keyed joins (co-partitioned after the
     first shuffle), distinct rollups, 3-row output."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", epoch_us("ts").alias("tus")
     )
     v = e.filter(F.col("event_type") == "view").select(
@@ -120,11 +116,11 @@ SELECT * FROM (
 
 def graph_components_minlabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the part co-purchase graph (edge = two
-    parts in the same order) via {n} rounds of min-label propagation:
+    parts in the same order) via 5 rounds of min-label propagation:
     label(v) <- min(label(v), min over neighbors).  Deterministic
     integer arithmetic — both engines converge identically round by
     round, so the round-limited result is exactly comparable even
-    where components have diameter > {n}.
+    where components have diameter > 5.
 
     Scale shape (round-10 bipartite form; r12 adjacency rewrite):
     each propagation round runs as two bipartite half-steps over the
@@ -140,15 +136,13 @@ def graph_components_minlabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning, so the old "co-partitioned" copies re-exchanged
     every round) are gone.  Arrays stay bounded at any SF: basket
     size and orders-per-part do not grow with scale.  Top-20 via
-    TakeOrderedAndProject.""".format(
-        n=_LP_ITERS
-    )
+    TakeOrderedAndProject."""
     # Half-step identity: om(o) = min label over parts of o;
     # label'(v) = min om over orders containing v (v's own label flows
     # through its own orders, so least() is implicit, and min over
     # co-order parts == min over graph neighbors).  Node set: parts in
     # >= 1 multi-part order, matching the old edge-derived set.
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     by_order = (
         li.groupBy("l_orderkey")
         .agg(F.collect_set("l_partkey").alias("parts"))
@@ -169,9 +163,7 @@ def graph_components_minlabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from exploded labels.orders, min per part from exploded by_order
     # .parts, re-attach orders from by_part), so the physical plan and
     # the integer-exact results are unchanged.
-    by_order.createOrReplaceTempView("cc_by_order")
-    by_part.createOrReplaceTempView("cc_by_part")
-    rounds = ["l0 AS (SELECT node, node AS lbl, orders FROM cc_by_part)"]
+    rounds = ["l0 AS (SELECT node, node AS lbl, orders FROM {by_part})"]
     prev = "l0"
     for i in range(1, _LP_ITERS + 1):
         rounds.append(
@@ -182,16 +174,18 @@ def graph_components_minlabel(spark: SparkSession, sf_dir: str) -> DataFrame:
         rounds.append(
             f"n{i} AS (SELECT node, MIN(om) AS lbl FROM ("
             "SELECT m.om, explode(b.parts) AS node "
-            f"FROM m{i} m JOIN cc_by_order b ON b.l_orderkey = m.l_orderkey"
+            f"FROM m{i} m JOIN {{by_order}} b ON b.l_orderkey = m.l_orderkey"
             ") GROUP BY node)"
         )
         rounds.append(
             f"l{i} AS (SELECT n.node, n.lbl, p.orders "
-            f"FROM n{i} n JOIN cc_by_part p ON p.node = n.node)"
+            f"FROM n{i} n JOIN {{by_part}} p ON p.node = n.node)"
         )
         prev = f"l{i}"
     labels = by_part.sparkSession.sql(
-        "WITH " + ", ".join(rounds) + f" SELECT node, lbl FROM {prev}"
+        "WITH " + ", ".join(rounds) + f" SELECT node, lbl FROM {prev}",
+        by_order=by_order,
+        by_part=by_part,
     )
     return (
         labels.groupBy(F.col("lbl").alias("component"))
@@ -245,17 +239,15 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     BUILDING segment's mean balance differ from the other segments'?
 
     Per nation, a two-sample permutation test: b = 0 uses the real
-    labels, b = 1..{B} relabels each customer by md5(custkey#b) % 2 —
+    labels, b = 1..200 relabels each customer by md5(custkey#b) % 2 —
     both engines draw the SAME permutations.  |meanA - meanB| across
     unequal group sizes compares by cross-multiplication
     |sA*nB - sB*nA| * (nAo*nBo)  vs  obs * (nAb*nBb), in
     DECIMAL(38,0): cents(1e9) x n(1e5) x n^2(1e10) overflows int64.
     p_i = 1 + #(T_b >= T_obs) over B+1 (add-one, exact integer).
     BH: sort p ascending (nation tiebreak), reject ranks <= kmax where
-    kmax = max k with p*m*{ainv} <= k*(B+1).  The rank window runs
-    over the 25-nation grid (bounded spine).""".format(
-        B=_BH_PERMS, ainv=_BH_ALPHA_INV
-    )
+    kmax = max k with p*m*20 <= k*(B+1).  The rank window runs
+    over the 25-nation grid (bounded spine)."""
     from pyspark.sql.window import Window
 
     from planning_center_data_pipeline_spark.operators.parallelism import (
@@ -267,7 +259,7 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-partition small-file scan all of that md5 CPU would run
     # on one core.
     c = cpu_floor(
-        _t(spark, sf_dir, "customer").select(
+        load_table(spark, sf_dir, "customer").select(
             "c_custkey",
             "c_nationkey",
             F.round(F.col("c_acctbal") * 100).cast("bigint").alias("cents"),
@@ -436,14 +428,14 @@ _BM25_TERM_MICRO = (
 
 
 def doc_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 documents by BM25 against the fixed query {terms}.
+    """Top-20 documents by BM25 against the fixed query ('data', 'pipeline', 'quality', 'model', 'training').
 
     Shape: one token explode -> (doc, term) tf rollup filtered to the
     5 query terms, df/n/total from two bounded aggregates (1-row and
     5-row broadcasts), per-term score = shared verbatim expression
     quantized to 1e-9, int64 per-doc sum, TakeOrderedAndProject
-    top-20.""".format(terms=_BM25_TERMS)
-    d = _t(spark, sf_dir, "documents")
+    top-20."""
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.explode(

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from planning_center_data_pipeline_spark.functions.temporal import epoch_us
+from planning_center_data_pipeline_spark.operators.graph import copurchase_adjacency
+from planning_center_data_pipeline_spark.operators.joins import broadcast_scaled
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _NMH_HASHES = 8
@@ -53,10 +55,6 @@ _H60_SPARK = "CAST(CONV(SUBSTRING(MD5({x}), 1, 15), 16, 10) AS BIGINT)"
 _H60_DUCK = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- neighborhood MinHash ------------------------------------------------------
 
 def _nmh_candidates(edges: DataFrame, vocab: DataFrame | None = None) -> DataFrame:
@@ -75,7 +73,7 @@ def _nmh_candidates(edges: DataFrame, vocab: DataFrame | None = None) -> DataFra
     # vocabulary join: |V| md5 evaluations instead of |E| x hashes —
     # the right direction at this |rows|:|distinct| ratio, ~120:1; the
     # minhash shingle pipeline measured the opposite trade at ~3:1 and
-    # digests per occurrence, see dedup._hex_digest_rows).  The
+    # digests per occurrence, see dedup.md5_minhash_columns).  The
     # x-hashes row explosion never materializes, and the signature
     # takes ONE shuffle (groupBy u with 8 min aggs) instead of
     # explode -> groupBy(u, j) -> groupBy(u, band).  Band h_lo/h_hi =
@@ -100,17 +98,11 @@ def _nmh_candidates(edges: DataFrame, vocab: DataFrame | None = None) -> DataFra
     # (measured: a 2.4M-row broadcast build, 14 s at sf0.1, vs 20k
     # vocabulary rows).  The vocabulary is |V| rows x 8 hashes; when
     # |V| outgrows the broadcast budget at extreme scale, set
-    # spark.planning_center.broadcastVocabulary=false (r12 ADVICE: the
+    # spark.sql.autoBroadcastJoinThreshold=-1 (r12 ADVICE: the
     # unconditional hint would OOM the build side rather than degrade)
     # and the identical plan falls back to a sort-merge join.
-    bcast_vocab = (
-        edges.sparkSession.conf.get(
-            "spark.planning_center.broadcastVocabulary", "true"
-        )
-        == "true"
-    )
     per_u = (
-        edges.join(F.broadcast(vh) if bcast_vocab else vh, "v")
+        edges.join(broadcast_scaled(vh), "v")
         .groupBy("u")
         .agg(
             *[F.min(f"hv{j}").alias(f"mh{j}") for j in range(_NMH_HASHES)]
@@ -177,26 +169,7 @@ def graph_minhash_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-edge shuffle, replacing the former double edge-table join +
     groupBy).  The band bucket join still bounds candidates.  Same
     asymmetry contract as doc MinHash-LSH."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("pks")
-    )
-    adj = (
-        baskets.select(F.explode("pks").alias("u"), "pks")
-        .select("u", F.explode("pks").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .groupBy("u")
-        .agg(F.collect_set("v").alias("nbrs"))
-        # AQE coalesces the small array rollup to ~1 partition before it
-        # is checkpointed; every consumer below (edge explode, vocabulary
-        # md5, bucket-cap window, candidate join) would then run on ONE
-        # core.  Re-spread to the session parallelism first — the
-        # explicit exchange is |V| array rows, paid once.
-        .repartition(
-            spark.sparkContext.defaultParallelism, F.col("u")
-        )
-        .localCheckpoint(eager=False)
-    )
+    adj = copurchase_adjacency(load_table(spark, sf_dir, "lineitem"))
     edges = adj.select("u", F.explode("nbrs").alias("v"))
     # 8 md5-seeded hashes of each neighbor, min per (node, seed), banded
     # and bucket-joined with the per-bucket skew cap (see _NMH_BUCKET_CAP).
@@ -307,7 +280,7 @@ def asof_nearest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global window).  Users are sampled (user_id % 10 = 0) to match
     the other as-of variants' panel."""
     e = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 10 == 0)
         .select("user_id", "event_type", "event_id", epoch_us("ts").alias("tus"))
     )
@@ -372,7 +345,7 @@ def data_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cents^2 x rows passes int64 only through SF ~0.3), then each of
     the 6 pair correlations is a fixed double expression over exact
     aggregates, rounded to 1e-9."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("bigint").alias("qty"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
         F.round(F.col("l_discount") * 10000).cast("bigint").alias("disc_bps"),
@@ -472,7 +445,7 @@ def ev_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     > 1 means burstier than Poisson.  Daily rollup, then exact
     integer moments per type over the bounded day spine; one double
     division chain per type."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))

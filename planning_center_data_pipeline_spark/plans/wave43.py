@@ -25,49 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from planning_center_data_pipeline_spark.operators.graph import copurchase_adjacency
+from planning_center_data_pipeline_spark.operators.joins import broadcast_scaled
 from planning_center_data_pipeline_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-def _copurchase_sym_adj(li: DataFrame) -> DataFrame:
-    """Symmetric distinct co-purchase adjacency (u, nbrs): two shuffles
-    total — collect_set(pk) per order basket, map-side double explode,
-    collect_set per node (the dedup lives inside the aggregates; the
-    u != v guard excludes self-loops).  nbrs is exactly the set of
-    parts sharing an order with u, so size(nbrs) IS the co-purchase
-    degree — consumers read degrees for free instead of paying the
-    union-both-orientations + groupBy rollup.  Repartitioned to the
-    session parallelism before the lazy checkpoint because AQE
-    coalesces the small array rollup to ~1 partition and every
-    map-side explode downstream would serialize (the wave39 lesson).
-
-    Memory bound (r12 ADVICE): one node's whole neighbor set sits in a
-    single aggregation buffer/row.  Co-purchase degree is bounded by
-    baskets-per-part x basket size — both SF-invariant in this schema
-    (~30 x 7: parts scale with data volume), so the max row is KB-sized
-    at any scale.  On a schema where a hub's degree CAN grow with
-    volume, pre-filter or cap hubs before the collect (approximate
-    degree cap, salted two-level aggregation) — consumers here
-    additionally hub-cap before any wedge/pair explosion."""
-    baskets = (
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .groupBy("ok")
-        .agg(F.collect_set("pk").alias("pks"))
-    )
-    return (
-        baskets.select(F.explode("pks").alias("u"), F.col("pks"))
-        .select("u", F.explode("pks").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .groupBy("u")
-        .agg(F.collect_set("v").alias("nbrs"))
-        .repartition(
-            li.sparkSession.sparkContext.defaultParallelism, F.col("u")
-        )
-        .localCheckpoint(eager=False)
-    )
 
 
 def _copurchase_edges(li: DataFrame) -> DataFrame:
@@ -115,8 +75,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, x*x, x*y over BOTH orientations equals the old per-edge sums of
     (x+y), (x^2+y^2), 2xy term-for-term, and m = the orientation-row
     count = 2E — identical values into the identical final formula."""
-    li = _t(spark, sf_dir, "lineitem")
-    adj = _copurchase_sym_adj(li)
+    li = load_table(spark, sf_dir, "lineitem")
+    adj = copurchase_adjacency(li)
     oriented = adj.select(
         F.size("nbrs").cast("decimal(38,0)").alias("x"),
         F.explode("nbrs").alias("v"),
@@ -130,15 +90,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-explode size estimate through, so the planner was building
     # the broadcast from the EXPLODED |2E|-row side (BuildLeft in the
     # r13 before-plan).  Broadcast the |V|-row degree side explicitly;
-    # gate on the shared conf so extreme-scale |V| degrades to
+    # with broadcasting switched off an extreme-scale |V| degrades to
     # sort-merge without a code edit.
-    bcast = (
-        spark.conf.get("spark.planning_center.broadcastVocabulary", "true")
-        == "true"
-    )
-    contrib = oriented.join(
-        F.broadcast(dv) if bcast else dv, "v"
-    ).select("x", "y")
+    contrib = oriented.join(broadcast_scaled(dv), "v").select("x", "y")
     sums = contrib.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("m"),
         F.sum(F.col("x")).alias("sx"),
@@ -203,13 +157,13 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     |probes| * C(k<=128, 2) — bounded per probe regardless of fact
     size.  Probes with k < 2 report cc = 0 over k values still shown.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # r12 (guide §2.4, §8): build from the shared symmetric adjacency
     # arrays — degree IS size(nbrs), so the union-both-orientations
     # degree rollup disappears; the small-u restriction is a FILTER on
     # a node's own array size, and only the small-v restriction of the
     # neighbor lists needs a join (against the |V|-row small-id set).
-    fadj = _copurchase_sym_adj(li)
+    fadj = copurchase_adjacency(li)
     small_u = fadj.where(F.size("nbrs") <= _LCC_HUB_CAP)
     small_ids = small_u.select(F.col("u").alias("v"))
     # small-small adjacency arrays (both endpoints under the hub cap)
@@ -311,7 +265,7 @@ def stat_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cells = li.groupBy(
         (F.col("l_returnflag") == "R").cast("int").alias("ret"),
         F.col("l_quantity").cast("bigint").alias("q"),
@@ -415,7 +369,7 @@ def doc_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     term, VMR = (D*Q - S^2) / (D*S) — exact integers until one final
     double.  Shape: (term, doc) counts -> per-term sums -> top-50 by
     ORDER BY + LIMIT (no global window)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         F.col("doc_id"),
         F.explode(F.split(F.lower(F.col("text")), "[^a-z0-9]+")).alias("w"),
@@ -482,7 +436,7 @@ def li_vwap_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer micro-units (extendedprice is qty * unitprice in TPC-H, so
     unit_micro = round(extprice / qty * 1e6) reconstructs exactly).
     One partial-agg rollup; one double division."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     base = li.select(
         F.year("l_shipdate").cast("bigint").alias("yr"),
         F.month("l_shipdate").cast("bigint").alias("mo"),

@@ -30,10 +30,6 @@ from planning_center_data_pipeline_spark.sources.tables import load_table
 _PI_ITERS = 12  # mixes to 6-decimal fixpoint by ~10; 25 measured identical
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- Markov stationary distribution ------------------------------------------------
 #
 # The transition-chain derivation below is the SINGLE definition site for
@@ -51,7 +47,7 @@ def build_transition_chain(
     row-stochastic transition relation p(cur, nxt, c, rt), localCheck-
     pointed so downstream unrolled rounds build on truncated lineage.
     Returns (p, types) where types is the distinct source-state enum."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         e.select("user_id", "event_id", "ts", F.col("event_type").alias("cur"))
@@ -84,23 +80,20 @@ def power_iteration(x: DataFrame, p: DataFrame, iters: int = _PI_ITERS) -> DataF
     analyzed once; round expression `SUM(pi * CAST(c AS DOUBLE) /
     CAST(rt AS DOUBLE))` is the identical Catalyst tree, so the
     physical plan and results are unchanged (oracle hash== both SFs).
-    Temp views are resolved eagerly at spark.sql(), so later
-    createOrReplaceTempView calls by sibling queries cannot retarget
-    this plan."""
-    spark = x.sparkSession
-    x.createOrReplaceTempView("pi_x0")
-    p.createOrReplaceTempView("pi_p")
+    The frames are bound through spark.sql keyword arguments: each gets
+    a uniquely named view that lives only for the call, so queries
+    built concurrently in one session cannot retarget this plan."""
     rounds = []
-    prev = "pi_x0"
+    prev = "{x0}"
     for i in range(1, iters + 1):
         rounds.append(
             f"x{i} AS (SELECT p.nxt AS t, "
             "SUM(x.pi * CAST(p.c AS DOUBLE) / CAST(p.rt AS DOUBLE)) AS pi "
-            f"FROM {prev} x JOIN pi_p p ON x.t = p.cur GROUP BY p.nxt)"
+            f"FROM {prev} x JOIN {{p}} p ON x.t = p.cur GROUP BY p.nxt)"
         )
         prev = f"x{i}"
-    return spark.sql(
-        "WITH " + ", ".join(rounds) + f" SELECT t, pi FROM {prev}"
+    return x.sparkSession.sql(
+        "WITH " + ", ".join(rounds) + f" SELECT t, pi FROM {prev}", x0=x, p=p
     )
 
 
@@ -142,7 +135,7 @@ def power_rounds_sql(iters: int = _PI_ITERS) -> tuple[str, str]:
 
 
 def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power iteration x <- x P for {n} rounds from the uniform vector,
+    """Power iteration x <- x P for 12 rounds from the uniform vector,
     where P is the row-stochastic event-type transition matrix
     (consecutive events per user timeline).  The matrix is an
     enum x enum relation (a handful of rows), so each round is a tiny
@@ -150,7 +143,7 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass that builds the transition counts.  Transition probabilities
     stay exact rationals (count / row_total) inside the iteration
     expression; per-round sums are <= |types| doubles, so ROUND 6 is
-    stable across engines.""".format(n=_PI_ITERS)
+    stable across engines."""
     p, types = build_transition_chain(spark, sf_dir)
     n_types = types.agg(F.count(F.lit(1)).alias("k"))
     # Irreducibility guard (round-9 ADVICE): the iteration's state space
@@ -225,9 +218,9 @@ def stat_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer); chi2_F = 12/(n k (k+1)) * sum_j R_j^2 - 3 n (k+1)
     (cents make ties measure-zero but the midrank form handles them
     exactly anyway)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     cell = (
         o.join(c.select("c_custkey", "c_nationkey"),
                o.o_custkey == c.c_custkey)
@@ -338,7 +331,7 @@ def ord_little_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly 1 on an infinite horizon; its deviation measures
     year-boundary carryover.  Shape: one lineitem rollup, then a
     bounded year-spine join."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     res = (
         li.groupBy("l_orderkey")
         .agg(
@@ -466,7 +459,7 @@ def doc_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one shared ln expression; low H = formulaic text, high H =
     diverse continuations.  Shape: posexplode + doc-partitioned lead
     window + two rollups."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "source",
         "doc_id",

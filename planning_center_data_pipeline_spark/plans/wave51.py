@@ -68,10 +68,6 @@ from planning_center_data_pipeline_spark.plans.wave50 import (
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- damped-trend Holt-Winters --------------------------------------------------------
 
 
@@ -317,9 +313,9 @@ def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which biases the no-ties variance) is visible in the result.
     Scale shape: one fact rollup to the bounded 25 x |years| grid;
     windows partitioned per nation over |years| rows."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     rev = (
         o.join(
             c.select("c_custkey", "c_nationkey"),
@@ -467,7 +463,7 @@ def emb_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     (10 x 64)."""
     from planning_center_data_pipeline_spark.operators import similarity as S
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
         "label",
         "vec_id",
@@ -633,7 +629,7 @@ def ev_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln(n_bins) in [0, 1] — near 1 is white (flat spectrum), near 0 is
     a dominant period.  Scale shape: one fact rollup to <= ~2400
     days, 63-row bounded bin grid, 1-row output."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = (
         e.select(F.to_date("ts").alias("d"))
         .groupBy("d")
@@ -759,17 +755,16 @@ def doc_lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-measured recall of the portable MinHash-LSH near-dup
     pipeline (16 hashes, 4 bands of 4, threshold 0.5 — the
     doc_minhash_lsh_portable configuration) against exact shingle
-    Jaccard, on the fixed probe panel doc_id % {m} == 0 AND
-    doc_id < {cap} (bounded <= {sz} docs at any SF).  Ground truth =
+    Jaccard, on the fixed probe panel doc_id % 7 == 0 AND
+    doc_id < 3500 (bounded <= 500 docs at any SF).  Ground truth =
     all pairs with exact Jaccard >= 0.5 touching the panel, computed
     by broadcasting the panel's shingles against the corpus shingle
     table; every truth pair survives the LSH pipeline's exact-verify
     step, so recall isolates the BANDING stage — the approximate part.
     Scale shape: one corpus shingle scan joined to a broadcast panel
     (bounded), plus the LSH pipeline itself (banded bucket join, the
-    100 TB path).""".format(m=_PANEL_MOD, cap=_PANEL_CAP,
-                            sz=_PANEL_CAP // _PANEL_MOD)
-    d = _t(spark, sf_dir, "documents")
+    100 TB path)."""
+    d = load_table(spark, sf_dir, "documents")
     # one shingle scan shared by the truth side and the LSH pipeline;
     # lazily checkpointed so the four consumers read a materialized
     # table instead of re-running tokenize/shingle/explode each
@@ -810,7 +805,7 @@ def doc_lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel_pair = (
         (F.col("id_1") % _PANEL_MOD == 0) & (F.col("id_1") < _PANEL_CAP)
     ) | ((F.col("id_2") % _PANEL_MOD == 0) & (F.col("id_2") < _PANEL_CAP))
-    lsh = D.minhash_near_dups_portable(
+    lsh = D.minhash_near_dups(
         d,
         "doc_id",
         "text",
@@ -818,6 +813,7 @@ def doc_lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_hashes=16,
         bands=4,
         threshold=0.5,
+        band_keys=D.md5_band_keys,
         shingle_df=sh,
         # only panel-touching candidates can intersect truth, so the
         # exact rescore is restricted to them (mirrored in the oracle)

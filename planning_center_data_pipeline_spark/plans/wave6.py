@@ -13,15 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from planning_center_data_pipeline_spark.operators.joins import broadcast_scaled
 from planning_center_data_pipeline_spark.operators.sampling import (
     aes_key_sql,
     weighted_sample,
 )
 from planning_center_data_pipeline_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --- weighted reservoir sample ----------------------------------------------
@@ -34,7 +31,7 @@ def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional to token count' curation primitive: per-row key
     expression + TakeOrderedAndProject, no global sort, no shuffle of
     document text."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         weighted_sample(d, "doc_id", "n_chars", 500)
         .select("doc_id", F.col("n_chars").alias("w_chars"))
@@ -64,7 +61,7 @@ def doc_weighted_sample_stratified(
         aes_key,
     )
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     w = Window.partitionBy("source").orderBy(
         F.desc("k"), F.asc("doc_id")
     )
@@ -113,7 +110,7 @@ def jw_best_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # on unblocked input or a degenerate block (misuse guard).
         return pd.Series(jw_micro_pairs(a, b, block=blk), dtype="int64")
 
-    parts = _t(spark, sf_dir, "part").select(
+    parts = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
         F.split(F.col("p_name"), " ").getItem(1).alias("noun"),
@@ -208,13 +205,13 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
     100 entries — and pairs come from a map-side double explode with
     the SAME length + positional predicates applied in-row.  The two
     payload attaches carry an explicit broadcast hint: the build side
-    is the |docs|-row array table (vocabulary-scale; at a corpus size
-    where it outgrows the broadcast budget the df auto-switch has long
-    since routed to the capped path, whose docs table shrinks with the
-    rare-shingle restriction — and the hint degrades to a size
-    misestimate, not wrong results).  Plan: 8 shuffle Exchanges -> 4
-    (prefix group, candidate distinct, final sort x2), payload
-    attaches BroadcastHashJoin."""
+    is the |docs|-row array table, which grows with the corpus.  A
+    forced hint on a too-big table does not degrade gracefully — the
+    build side runs out of memory — so the hint is off when
+    spark.sql.autoBroadcastJoinThreshold is -1 and the attaches fall
+    back to sort-merge joins (operators.joins.broadcast_scaled).  Plan:
+    8 shuffle Exchanges -> 4 (prefix group, candidate distinct, final
+    sort x2), payload attaches BroadcastHashJoin."""
     docs = sh_with_df.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias(
             "by_rarity"
@@ -266,8 +263,8 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
         F.col("n").alias("n_2"),
     )
     return (
-        cand.join(F.broadcast(d1), "id_1")
-        .join(F.broadcast(d2), "id_2")
+        cand.join(broadcast_scaled(d1), "id_1")
+        .join(broadcast_scaled(d2), "id_2")
         .select(
             "id_1",
             "id_2",
@@ -348,7 +345,7 @@ def doc_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = 0.7
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sh = shingle_table(d, "doc_id", "text", k=3)
     # vocab-sized; materialized once (executor-side) and reused by the
     # max-df probe and the per-doc build — the probe is one extra
@@ -399,7 +396,7 @@ def doc_jaccard_rare_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap = JACCARD_DF_CAP  # ubiquity threshold: templates exceed it at
     # every sf, doc-specific shingles never do — measured candidates
     # 35k (sf0.1) -> 84k (sf1), sub-linear, vs 2.1M at cap=100
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sh_all = shingle_table(d, "doc_id", "text", k=3)
     dfreq = (
         sh_all.groupBy("shingle")
@@ -508,8 +505,8 @@ def li_scd2_pit_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         money_sum,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     ch = o.withColumn("prev_prio", F.lag("o_orderpriority").over(w)).filter(
         F.col("prev_prio").isNull()

@@ -61,3 +61,29 @@ def test_result_invariant_to_shuffle_partitions(spark, fn):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert few == many
+
+
+def test_sql_bound_frames_safe_across_threads(spark, sf_dir):
+    """Queries that bind DataFrames into one spark.sql statement must
+    not see each other's frames when built concurrently in one session.
+    With a fixed global temp-view name, the same query built at two
+    scale factors at once could analyze against the other thread's
+    view; each build must equal its single-thread result."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from planning_center_data_pipeline_spark.plans import wave48
+
+    jobs = [
+        (fn, sf)
+        for fn in (wave11.graph_pagerank_parts, wave48.ev_markov_stationary)
+        for sf in (sf_dir, SF_DIR)
+    ]
+    single = [sorted(fn(spark, sf).collect()) for fn, sf in jobs]
+    views_before = {t.name for t in spark.catalog.listTables()}
+    for _ in range(2):
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            built = list(
+                pool.map(lambda job: job[0](spark, job[1]), jobs, timeout=600)
+            )
+        assert [sorted(df.collect()) for df in built] == single
+    assert {t.name for t in spark.catalog.listTables()} == views_before

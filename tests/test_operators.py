@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -774,24 +776,51 @@ def test_lsh_near_dup_subset_and_planted_recall(spark, sf_dir):
     assert planted <= got  # measured: 50/50 with these deterministic planes
 
 
-def test_triangle_count_no_forced_broadcast(spark, sf_dir):
+def _scaled_broadcast_queries():
+    """The queries whose |V|- or |docs|-row join sides carry the
+    operators.joins.broadcast_scaled hint, with that join's key."""
+    from planning_center_data_pipeline_spark.plans import (
+        advanced,
+        wave6,
+        wave39,
+        wave43,
+    )
+
+    return [
+        pytest.param(advanced.graph_triangle_count, "t", id="triangle"),
+        pytest.param(wave43.graph_degree_assortativity, "v", id="assortativity"),
+        pytest.param(wave39.graph_minhash_neighbors, "v", id="minhash_neighbors"),
+        pytest.param(wave6.doc_jaccard_prefix_filter, "id_1", id="jaccard_prefix"),
+    ]
+
+
+@pytest.mark.parametrize("query,key", _scaled_broadcast_queries())
+def test_triangle_count_no_forced_broadcast(spark, sf_dir, query, key):
     """The degree and adjacency tables are |V|-cardinality — a forced
     broadcast hint there OOMs at 100x scale.  With the broadcast
     threshold disabled the plan must contain NO BroadcastHashJoin:
     proves no hint overrides the optimizer's sizing and the joins
     degrade to shuffle joins when the build side is too big."""
-    from planning_center_data_pipeline_spark.plans.advanced import (
-        graph_triangle_count,
-    )
-
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = graph_triangle_count(spark, sf_dir)
+        df = query(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "BroadcastHashJoin" not in plan
+
+
+@pytest.mark.parametrize("query,key", _scaled_broadcast_queries())
+def test_scaled_side_broadcast_by_default(spark, sf_dir, query, key):
+    """The other half of the contract: under the default threshold the
+    hinted join builds its hash table from the |V|-row side (BuildRight),
+    never from the exploded probe side the planner misestimates."""
+    plan = query(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    probe = re.compile(
+        rf"BroadcastHashJoin \[{key}#\d+L?\], \[{key}#\d+L?\], \w+, BuildRight"
+    )
+    assert probe.search(plan), plan
 
 
 def test_write_observed_metrics_single_pass(spark, sf_dir, tmp_path):

@@ -85,29 +85,6 @@ def test_bench_warmup_and_headline_names_exist():
     assert len(known) >= 50  # headline + warmup really were scanned
 
 
-def test_rotation_sample_sets_are_consistent():
-    """The canary rotation's bookkeeping must stay sound: the
-    per-round sampled sets are pairwise disjoint (the flattened walk
-    must not visit a name twice) and every recorded name still exists
-    in the registry (a renamed query would silently break its canary
-    re-checks)."""
-    from planning_center_data_pipeline_spark import plans as P
-
-    queries, oracles = collect_all()
-    rounds = P._SAMPLED_BY_ROUND
-    seen: set[str] = set()
-    for i, s in enumerate(rounds):
-        dup = seen & s
-        assert not dup, f"round-set {i} repeats earlier names: {dup}"
-        seen |= s
-    missing = seen - set(queries)
-    assert not missing, f"sampled names no longer registered: {missing}"
-    # canary picker returns _N_CANARIES distinct, oracled names
-    canaries = P._canary_names(oracles)
-    assert len(canaries) == P._N_CANARIES == len(set(canaries))
-    assert all(c in oracles for c in canaries)
-
-
 def test_no_oracle_is_vacuous_at_sf001(con_sf001):
     """A 0-row result hash-matches trivially — the oracle proves
     nothing.  Every oracled query must return at least one row at the

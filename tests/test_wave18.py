@@ -35,6 +35,8 @@ def test_centroid_drift_matches_numpy(spark):
 
 
 def test_common_neighbors_probe_shape(spark):
+    # the docstring is a literal, not a .format() expression statement
+    assert wave18.graph_common_neighbors.__doc__
     rows = wave18.graph_common_neighbors(spark, SF_DIR).collect()
     assert rows
     by_probe: dict[int, list] = {}

@@ -240,7 +240,7 @@ def test_lsh_recall_matches_direct_python(spark):
     }
 
     # portable MinHash signatures: md5(seed|shingle), two 60-bit
-    # halves per digest (operators/dedup._md5_hash60_family)
+    # halves per digest (operators/dedup.md5_minhash_columns)
     def sig(doc):
         out = []
         for j in range(16):

@@ -1,6 +1,12 @@
-"""Time individual queries at a given sf dir (bench.py methodology:
-noop sink, warm session). Usage: python tools/timeq.py [sf_dir] q1 q2 ...
-With no query names, times everything."""
+"""Time queries in one warm session, split into BUILD (the Python
+query() call: plan construction + analysis, including any eager
+checkpoint jobs) and EXEC (a noop-sink write, the bench.py
+methodology).  Prints the minimum of each phase over N reps, then the
+per-rep times.
+
+Usage: python tools/timeq.py [sf_dir] [--reps N] [q1 q2 ...]
+With no query names, times every registered query.  sf_dir defaults to
+$SPARK_GRAFT_SF_DIR, else the sf0.1 test data; N defaults to 3."""
 
 from __future__ import annotations
 
@@ -18,19 +24,33 @@ from planning_center_data_pipeline_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     args = sys.argv[1:]
+    reps = 3
+    if "--reps" in args:
+        i = args.index("--reps")
+        reps = int(args[i + 1])
+        del args[i : i + 2]
     sf_dir = args[0] if args and "/" in args[0] else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
     names = [a for a in args if "/" not in a]
     spark = get_spark(app_name="timeq")
     qs = entrymod.queries()
-    picked = {n: qs[n] for n in names} if names else qs
-    # warmup
-    next(iter(qs.values()))(spark, sf_dir).collect()
-    for name, fn in picked.items():
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        print(f"{name}: {time.time() - t0:.2f}s", flush=True)
+    next(iter(qs.values()))(spark, sf_dir).collect()  # warmup
+    for name in names or list(qs):
+        builds, execs = [], []
+        for _ in range(reps):
+            t0 = time.time()
+            df = qs[name](spark, sf_dir)
+            t1 = time.time()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.time()
+            builds.append(round(t1 - t0, 3))
+            execs.append(round(t2 - t1, 3))
+        print(
+            f"{name}: build_min={min(builds)} exec_min={min(execs)} "
+            f"builds={builds} execs={execs}",
+            flush=True,
+        )
     spark.stop()
 
 
